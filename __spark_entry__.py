@@ -3143,8 +3143,8 @@ def q_llm_curation_funnel(spark, sf_dir):
     """End-to-end modern LLM curation funnel: Gopher quality gate →
     duplicate-span cutting → CCNet perplexity buckets → DSIR
     importance selection, audited as one per-stage-count row. Every
-    stage is a verified operator; the composition persists the
-    cleaned corpus across its three consumers, and the oracle chains
+    stage is a verified operator; the composition local-checkpoints
+    its multi-consumer stage tables, and the oracle chains
     the five SQL twins as MATERIALIZED CTEs (pipeline.py)."""
     from minisql_engine_spark.pipeline import llm_curation_funnel
 

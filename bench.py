@@ -242,7 +242,6 @@ def main() -> None:
     from minisql_engine_spark.operators.retrieval import (
         clear_retrieval_cache,
     )
-    from minisql_engine_spark.pipeline import clear_llm_pipeline_cache
     from minisql_engine_spark.operators.semdedup import clear_semdedup_cache
     from minisql_engine_spark.operators.span_dedup import clear_span_cache
     from minisql_engine_spark.operators.dsir import clear_dsir_cache
@@ -268,7 +267,6 @@ def main() -> None:
         clear_span_cache()
         clear_dsir_cache()
         clear_retrieval_cache()
-        clear_llm_pipeline_cache()
         clear_graph_cache()
         clear_classify_cache()
 

@@ -152,6 +152,8 @@ def dsir_weights(
     # former shape computed tgt/raw/totals straight off `feats`,
     # re-executing the explode per consumer (4 passes measured —
     # guide §5). Counts are identical: count(instances) ≡ sum(tf).
+    # (checkpointing `dtf` instead was measured and rejected; numbers
+    # beside span_dedup's gram persist)
     dtf = feats.groupBy(id_col, "is_target", "bucket").agg(
         F.count("*").cast("bigint").alias("tf")
     ).persist()

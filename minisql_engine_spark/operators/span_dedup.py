@@ -113,7 +113,16 @@ def duplicate_spans(
         .select(F.col(id_col), F.posexplode(grams).alias("pos", "g"))
         # two consumers (count aggregate + mark-back join) — persist
         # so the tokenize+md5 projection runs once (guide §5;
-        # MEMORY_AND_DISK spills rather than recomputing at scale)
+        # MEMORY_AND_DISK spills rather than recomputing at scale).
+        # Rejected: localCheckpoint(eager=False) here and on dsir's
+        # `dtf`, on top of the LLM funnel's three stage checkpoints.
+        # 400-doc seed-701 corpus, local[4], two alternating process
+        # pairs: 42 jobs instead of 47 and no InMemoryRelation left,
+        # but funnel build+collect (variant vs kept) cold 11.4/15.3 s
+        # vs 14.1/16.4 s and warm 4.2-5.9 s vs 4.4-6.0 s: inside the
+        # run-to-run spread, an 11% job cut (the accept bar is 25%),
+        # and this standalone operator would run its shuffles when
+        # called.
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     _GRAM_CACHE.append(pos_grams)

@@ -32,6 +32,10 @@ near-dup clustering stage runs Spark jobs when called (the
 connected-components fixpoint needs actions). At 100 TB you would
 materialize the post-exact-dedup corpus to parquet first anyway —
 pass ``near_dups=False`` to keep the fully-lazy subset.
+``llm_curation_funnel`` and ``curate_llm_corpus`` also run Spark jobs
+when called: their stage tables are lazy ``localCheckpoint``s, and
+under AQE a lazy checkpoint runs its shuffle stages at the call; only
+the work after the last stage boundary waits for the action.
 """
 
 from __future__ import annotations
@@ -209,18 +213,6 @@ def compose_training_set(
     )
 
 
-_LLM_CACHE: list = []
-
-
-def clear_llm_pipeline_cache() -> None:
-    """Release the persisted cleaned-corpus table."""
-    while _LLM_CACHE:
-        try:
-            _LLM_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
-
 def _llm_stages(
     docs: DataFrame,
     id_col: str,
@@ -230,40 +222,44 @@ def _llm_stages(
     span_k: int,
 ) -> dict[str, DataFrame]:
     """Build every stage of the LLM funnel ONCE (shared by the roster
-    and the audit): the cleaned corpus is persisted because three
-    consumers read it (LM scoring join, DSIR explode, audit sums)."""
+    and the audit). ``kept``, ``cleaned`` and ``survivors`` each have
+    several consumers and each is a lazy ``localCheckpoint``, not a
+    ``persist``: persist cuts execution but not the logical plan, and
+    every stage reads its parent twice, so persisted stages nested
+    their parents' plans — 173k extended-explain lines and 56 jobs at
+    sf0.01, against ~650 lines and 47 jobs checkpointed. Spark's
+    ContextCleaner releases the blocks after the stage frames are
+    unreferenced and the JVM has collected them, as in
+    ``operators/clustering.py``; ``clearCache`` does not."""
     from .operators.dsir import dsir_weights
     from .operators.lm_score import lm_perplexity
     from .operators.quality_rules import quality_rule_report
     from .operators.span_dedup import cut_spans, duplicate_spans
 
+    # kept feeds duplicate_spans' gram build, cut_spans' corpus side,
+    # and the audit count — checkpointed so the quality gate runs once
     kept = docs.join(
         quality_rule_report(docs, id_col, text_col)
         .filter("passes_all")
         .select(id_col),
         id_col,
-    ).persist()
-    # kept feeds duplicate_spans' gram build, cut_spans' corpus side,
-    # and the audit count — persisted so the quality gate runs once
-    # (same multi-consumer rule as cleaned/survivors below)
-    _LLM_CACHE.append(kept)
+    ).localCheckpoint(eager=False)
     cleaned = (
         cut_spans(kept, duplicate_spans(kept, k=span_k), id_col, text_col)
         .join(docs.select(id_col, lang_col), id_col)
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    _LLM_CACHE.append(cleaned)
     ppl = lm_perplexity(cleaned, id_col, text_col)
     # survivors also multi-consumer (DSIR explode, the final join,
-    # the audit count) — without this the whole LM-scoring subtree
-    # re-executes per consumer (measured ~3× on the funnel bench)
+    # the audit count) — without a materialization the whole
+    # LM-scoring subtree re-executes per consumer (measured ~3× on
+    # the funnel bench)
     survivors = cleaned.join(
         ppl.filter(F.col("bucket") != "tail").select(
             id_col, "n_tokens_lm", "ppl", "bucket"
         ),
         id_col,
-    ).persist()
-    _LLM_CACHE.append(survivors)
+    ).localCheckpoint(eager=False)
     weights = dsir_weights(
         survivors, F.col(lang_col) == target_lang, id_col, text_col
     )
@@ -313,9 +309,12 @@ def curate_llm_corpus(
     * DSIR last: importance weighting assumes its pool already looks
       like training data; scoring junk wastes the budget.
 
-    The cleaned corpus is persisted (three consumers; release via
-    ``clear_llm_pipeline_cache``). At 100 TB checkpoint it to parquet
-    between stages instead.
+    The multi-consumer stage tables (quality-passed, cleaned,
+    perplexity survivors) are lazy local checkpoints, so the call
+    runs their shuffle stages and the returned plan starts at the
+    last of them; Spark releases the blocks after the frames are
+    unreferenced and garbage-collected. At 100 TB write each stage to parquet instead
+    (local checkpoints do not survive executor loss).
     """
     return _llm_stages(
         docs, id_col, text_col, lang_col, target_lang, span_k
@@ -334,8 +333,8 @@ def llm_curation_funnel(
     (n_input, n_quality_pass, n_span_cut_tokens, n_ppl_kept,
     n_selected, final_tokens) — the monitoring row a curation run
     records per batch. Every count derives from the SAME stage plans
-    as the roster (the cleaned table is persisted, so the audit adds
-    cheap aggregates, not recomputation)."""
+    as the roster (the stage tables are local checkpoints, so the
+    audit adds cheap aggregates, not recomputation)."""
     s = _llm_stages(docs, id_col, text_col, lang_col, target_lang, span_k)
     n_input = docs.agg(F.count("*").cast("bigint").alias("n_input"))
     n_quality = s["kept"].agg(
@@ -390,7 +389,7 @@ def llm_curation_funnel_sql(
     # reference, so the multi-consumer stages (kept, cleaned,
     # survivors) would re-run their whole upstream once per mention
     # (measured 32 s -> ~2 s at sf0.01) — the oracle-side analog of
-    # the Spark side's persist()
+    # the Spark side's stage checkpoints
     return (
         f"WITH kept AS MATERIALIZED (SELECT d.* FROM {table} d JOIN ({qr}) q"
         f"  ON d.{id_col} = q.{id_col} AND q.passes_all),"

@@ -34,34 +34,34 @@ class DialectError(ValueError):
     """Raised for reference-dialect forms with no relational meaning."""
 
 
-def _strip_comments(query: str) -> str:
+#: one token per match: a single-quoted literal (``''`` escapes a quote;
+#: an unterminated literal runs to the end) or a ``--`` line comment
+_LITERAL_OR_COMMENT = re.compile(r"'(?:[^']|'')*'?|--[^\n]*")
+
+
+def _strip_comments(query: str) -> tuple[str, str]:
     """Remove ``--`` line comments, respecting single-quoted string
-    literals (a ``--`` inside '...' is data, not a comment)."""
+    literals (a ``--`` inside '...' is data, not a comment).
+
+    Returns the stripped query and a mask of the same length in which
+    every literal is blanked to NULs, so the dialect rewrites search
+    the mask and never touch string data."""
     out: list[str] = []
-    in_str = False
-    i, n = 0, len(query)
-    while i < n:
-        ch = query[i]
-        if in_str:
-            out.append(ch)
-            if ch == "'":
-                if i + 1 < n and query[i + 1] == "'":  # escaped ''
-                    out.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-            out.append(ch)
-        elif ch == "-" and i + 1 < n and query[i + 1] == "-":
-            while i < n and query[i] != "\n":
-                i += 1
-            out.append(" ")
-            continue
+    mask: list[str] = []
+    pos = 0
+    for m in _LITERAL_OR_COMMENT.finditer(query):
+        code = query[pos : m.start()]
+        tok = m.group()
+        if tok[0] == "-":
+            out += (code, " ")
+            mask += (code, " ")
         else:
-            out.append(ch)
-        i += 1
-    return "".join(out)
+            out += (code, tok)
+            mask += (code, "\0" * len(tok))
+        pos = m.end()
+    out.append(query[pos:])
+    mask.append(query[pos:])
+    return "".join(out), "".join(mask)
 
 
 def _dialect_distinct_calls(q: str) -> list[re.Match]:
@@ -79,10 +79,11 @@ def _dialect_distinct_calls(q: str) -> list[re.Match]:
 
 def rewrite_query(query: str) -> str:
     """Rewrite a reference-dialect query into ANSI Spark SQL."""
-    q = _strip_comments(query).strip().rstrip(";").strip()
-    q = _AVERAGE_CALL.sub("avg(", q)  # sqlengine.py:631 alias
+    q, mask = _strip_comments(query)
+    # sqlengine.py:631 alias
+    edits = [(m.start(), m.end(), "avg(") for m in _AVERAGE_CALL.finditer(mask)]
 
-    matches = _dialect_distinct_calls(q)
+    matches = _dialect_distinct_calls(mask)
     if len(matches) > 1:
         # select distinct(a), distinct(b) — the reference zips
         # per-column distinct lists (sqlengine.py:662-678), which is
@@ -93,8 +94,18 @@ def rewrite_query(query: str) -> str:
         )
     if matches:
         m = matches[0]
-        q = q[: m.start()] + f"DISTINCT {m.group(1)}" + q[m.end():]
-    return q
+        edits.append((m.start(), m.end(), f"DISTINCT {m.group(1)}"))
+        edits.sort()
+
+    # the matches lie outside literals, where mask and q agree, so
+    # their spans splice straight into q
+    parts: list[str] = []
+    pos = 0
+    for start, stop, text in edits:
+        parts += (q[pos:start], text)
+        pos = stop
+    parts.append(q[pos:])
+    return "".join(parts).strip().rstrip(";").strip()
 
 
 def run_sql(spark: SparkSession, query: str) -> DataFrame:

@@ -4,8 +4,8 @@ The reference engine is one Python process holding the whole database
 in memory (``sqlengine.py:720-751, 99-154``). Our equivalent of "the
 engine is up" is a tuned ``SparkSession``: AQE enabled so joins/skew
 re-plan at runtime, Arrow enabled for the Pandas-UDF extension
-operators, and a shuffle-partition default sized for local[32] test
-runs while remaining overridable for cluster deployment.
+operators, and a shuffle-partition default sized to the local core
+count while remaining overridable for cluster deployment.
 
 Scale notes (100 TB design):
 * ``spark.sql.adaptive.enabled``: runtime coalescing of shuffle
@@ -25,7 +25,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def get_spark(
@@ -37,7 +40,8 @@ def get_spark(
     """Build (or reuse) a tuned SparkSession.
 
     Parameters mirror what a cluster deployment would override; defaults
-    target the local[$SPARK_GRAFT_CPUS] test environment.
+    target local[$SPARK_GRAFT_CPUS], or one thread per CPU this process
+    may run on when that is unset.
     """
     builder = (
         SparkSession.builder.appName(app_name)

@@ -80,7 +80,6 @@ def main() -> None:
     from minisql_engine_spark.operators.dsir import clear_dsir_cache
     from minisql_engine_spark.operators.span_dedup import clear_span_cache
     from minisql_engine_spark.operators.sq import clear_sq_cache
-    from minisql_engine_spark.pipeline import clear_llm_pipeline_cache
 
     def clear() -> None:
         clear_simhash_cache()
@@ -95,7 +94,6 @@ def main() -> None:
         clear_span_cache()
         clear_dsir_cache()
         clear_retrieval_cache()
-        clear_llm_pipeline_cache()
         clear_graph_cache()
         clear_classify_cache()
 

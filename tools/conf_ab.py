@@ -67,7 +67,6 @@ def main() -> None:
     from minisql_engine_spark.operators.semdedup import clear_semdedup_cache
     from minisql_engine_spark.operators.similarity import clear_centroid_cache
     from minisql_engine_spark.operators.sq import clear_sq_cache
-    from minisql_engine_spark.pipeline import clear_llm_pipeline_cache
 
     def clear() -> None:
         clear_simhash_cache()
@@ -80,7 +79,6 @@ def main() -> None:
         clear_clustering_cache()
         clear_semdedup_cache()
         clear_retrieval_cache()
-        clear_llm_pipeline_cache()
         clear_graph_cache()
         clear_classify_cache()
 

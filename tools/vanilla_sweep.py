@@ -99,7 +99,6 @@ def main() -> int:
              "clear_semdedup_cache"),
             ("minisql_engine_spark.operators.retrieval",
              "clear_retrieval_cache"),
-            ("minisql_engine_spark.pipeline", "clear_llm_pipeline_cache"),
             ("minisql_engine_spark.operators.graph", "clear_graph_cache"),
             ("minisql_engine_spark.operators.classify",
              "clear_classify_cache"),
