@@ -1333,18 +1333,18 @@ def q_dedup_minhash(spark, sf_dir):
     from minisql_engine_spark.operators.clustering import (
         connected_components,
     )
-    from minisql_engine_spark.operators.dedup import (
-        _FPS_CACHE,
-        minhash_lsh_dedup,
-    )
+    from minisql_engine_spark.materialize import hold
+    from minisql_engine_spark.operators.dedup import minhash_lsh_dedup
 
     # pairs feed the closure AND the final join — persist so the
     # verify subtree (shingle-intersect join) executes once, not
     # three times; released with the other dedup intermediates
-    pairs = minhash_lsh_dedup(
-        _t(spark, sf_dir, "documents"), threshold=0.5
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _FPS_CACHE.append(pairs)
+    pairs = hold(
+        minhash_lsh_dedup(
+            _t(spark, sf_dir, "documents"), threshold=0.5
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+        "dedup",
+    )
     comp = connected_components(pairs, "id_a", "id_b")
     return pairs.join(
         comp.select(
@@ -2737,9 +2737,7 @@ def q_ivf_index_search(spark, sf_dir):
         ivf_index_topk,
         write_ivf_index,
     )
-    from minisql_engine_spark.operators.similarity import (
-        clear_centroid_cache,
-    )
+    from minisql_engine_spark.materialize import release
 
     emb = _t(spark, sf_dir, "embeddings")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
@@ -2748,7 +2746,7 @@ def q_ivf_index_search(spark, sf_dir):
     # runs must not leak into this one)
     if path not in _IVF_BUILT:
         write_ivf_index(emb, path, refine_iters=2)
-        clear_centroid_cache()
+        release("centroids")
         _IVF_BUILT.add(path)
     queries = emb.filter(F.col("vec_id").isin([0, 1, 2, 3, 4]))
     out = ivf_index_topk(spark, path, queries, k=10)
@@ -4304,12 +4302,10 @@ def q_lm_bigram_perplexity(spark, sf_dir):
     scores into the tail (property-tested). Positional tokens persist
     once and feed c1/c2/scoring; the predecessor comes from a per-doc
     lag window (doc-sized partitions, never a global window)."""
-    from minisql_engine_spark.operators.lm_score import (
-        clear_lm_cache,
-        lm_bigram_perplexity,
-    )
+    from minisql_engine_spark.materialize import release
+    from minisql_engine_spark.operators.lm_score import lm_bigram_perplexity
 
-    clear_lm_cache()
+    release("lm")
     return lm_bigram_perplexity(_t(spark, sf_dir, "documents"))
 
 
@@ -4787,9 +4783,7 @@ def q_ivf_index_maintenance(spark, sf_dir):
         ivf_index_topk,
         write_ivf_index,
     )
-    from minisql_engine_spark.operators.similarity import (
-        clear_centroid_cache,
-    )
+    from minisql_engine_spark.materialize import release
 
     emb = _t(spark, sf_dir, "embeddings")
     tag = hashlib.md5(("ivfmaint" + sf_dir).encode()).hexdigest()[:12]
@@ -4803,7 +4797,7 @@ def q_ivf_index_maintenance(spark, sf_dir):
     # centroids that compaction throws away would just double the
     # training cost (measured: the cycle is Lloyd-bound)
     write_ivf_index(emb.filter(i % 3 != 0), path, refine_iters=0)
-    clear_centroid_cache()
+    release("centroids")
     append_to_ivf_index(emb.filter(i % 6 == 0), path)
     append_to_ivf_index(emb.filter(i % 6 == 3), path)
     big = max(
@@ -4811,7 +4805,7 @@ def q_ivf_index_maintenance(spark, sf_dir):
         for r in ivf_cell_stats(spark, path).collect()
     )
     rep = compact_ivf_index(spark, path, max_cell_size=big - 1)
-    clear_centroid_cache()
+    release("centroids")
     if not rep["compacted"] or rep["mean_dist_after"] is None:
         raise RuntimeError(
             f"compaction did not trigger/report: {rep!r}"
@@ -5098,21 +5092,16 @@ def q_split_leakage_safe(spark, sf_dir):
     surface."""
     from pyspark.storagelevel import StorageLevel
 
-    from minisql_engine_spark.operators.dedup import (
-        _FPS_CACHE,
-        minhash_lsh_dedup,
-    )
+    from minisql_engine_spark.materialize import hold
+    from minisql_engine_spark.operators.dedup import minhash_lsh_dedup
     from minisql_engine_spark.operators.splits import leakage_safe_split
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_dedup(docs, threshold=0.5).persist(
-        StorageLevel.MEMORY_AND_DISK
+    level = StorageLevel.MEMORY_AND_DISK
+    pairs = hold(
+        minhash_lsh_dedup(docs, threshold=0.5).persist(level), "dedup"
     )
-    _FPS_CACHE.append(pairs)
-    out = leakage_safe_split(docs, pairs).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _FPS_CACHE.append(out)
+    out = hold(leakage_safe_split(docs, pairs).persist(level), "dedup")
     straddle = (
         pairs.select("id_a", "id_b")
         .join(
@@ -5464,11 +5453,8 @@ def q_pagerank_customer_supplier(spark, sf_dir):
     sqlengine.py has no iterative operators."""
     from pyspark.sql.window import Window
 
-    from minisql_engine_spark.operators.graph import (
-        SCALE,
-        _PR_CACHE,
-        pagerank,
-    )
+    from minisql_engine_spark.materialize import hold
+    from minisql_engine_spark.operators.graph import SCALE, pagerank
 
     lineitem = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
@@ -5497,10 +5483,8 @@ def q_pagerank_customer_supplier(spark, sf_dir):
     ).select("e.src", "e.dst")
     # customer+supplier node set is dimension-sized → broadcast the
     # rank table each iteration; the cached edge list never reshuffles
-    pr = pagerank(
-        edges, n_iter=_PAGERANK_ITERS, broadcast_ranks=True
-    ).persist()
-    _PR_CACHE.append(pr)
+    pr = pagerank(edges, n_iter=_PAGERANK_ITERS, broadcast_ranks=True)
+    pr = hold(pr.persist(), "graph")
     mass = pr.agg(
         F.sum("pr_units").alias("m"), F.count("*").alias("n")
     ).collect()[0]
@@ -6818,11 +6802,8 @@ def q_pagerank_weighted_trade(spark, sf_dir):
     (dimension-sized node set) as the unweighted row."""
     from pyspark.sql.window import Window
 
-    from minisql_engine_spark.operators.graph import (
-        SCALE,
-        _PR_CACHE,
-        pagerank,
-    )
+    from minisql_engine_spark.materialize import hold
+    from minisql_engine_spark.operators.graph import SCALE, pagerank
 
     lineitem = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
@@ -6847,13 +6828,15 @@ def q_pagerank_weighted_trade(spark, sf_dir):
             )
         ).alias("e")
     ).select("e.src", "e.dst", "e.w")
-    pr = pagerank(
-        edges,
-        n_iter=_PAGERANK_ITERS,
-        weight="w",
-        broadcast_ranks=True,
-    ).persist()
-    _PR_CACHE.append(pr)
+    pr = hold(
+        pagerank(
+            edges,
+            n_iter=_PAGERANK_ITERS,
+            weight="w",
+            broadcast_ranks=True,
+        ).persist(),
+        "graph",
+    )
     mass = pr.agg(
         F.sum("pr_units").alias("m"), F.count("*").alias("n")
     ).collect()[0]

@@ -229,46 +229,14 @@ def main() -> None:
     # variance, but this makes the isolation structural. Within a
     # query, warm→timed cache reuse stays (index reuse IS the usage
     # pattern for ANN).
-    from minisql_engine_spark.operators.classify import (
-        clear_classify_cache,
-    )
-    from minisql_engine_spark.operators.clustering import (
-        clear_clustering_cache,
-    )
-    from minisql_engine_spark.operators.dedup import clear_simhash_cache
-    from minisql_engine_spark.operators.graph import clear_graph_cache
-    from minisql_engine_spark.operators.editsim import clear_editsim_cache
-    from minisql_engine_spark.operators.hashvec import clear_hashvec_cache
-    from minisql_engine_spark.operators.retrieval import (
-        clear_retrieval_cache,
-    )
-    from minisql_engine_spark.operators.semdedup import clear_semdedup_cache
-    from minisql_engine_spark.operators.span_dedup import clear_span_cache
-    from minisql_engine_spark.operators.dsir import clear_dsir_cache
-    from minisql_engine_spark.operators.similarity import clear_centroid_cache
-    from minisql_engine_spark.operators.sq import clear_sq_cache
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.lm_score import (
         clear_lm_frozen_cache,
     )
-    from minisql_engine_spark.operators.curriculum import (
-        clear_curriculum_cache,
-    )
 
     def _clear_caches() -> None:
-        clear_simhash_cache()
-        clear_sq_cache()
-        clear_curriculum_cache()
+        release()
         clear_lm_frozen_cache()
-        clear_editsim_cache()
-        clear_hashvec_cache()
-        clear_centroid_cache()
-        clear_clustering_cache()
-        clear_semdedup_cache()
-        clear_span_cache()
-        clear_dsir_cache()
-        clear_retrieval_cache()
-        clear_graph_cache()
-        clear_classify_cache()
 
     runs = {n: qs[n] for n in HEADLINE if n in qs}
     runs["flagship"] = em.flagship

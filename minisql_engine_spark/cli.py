@@ -22,6 +22,15 @@ import os
 import sys
 
 
+def _has_tables(data_dir: str) -> bool:
+    """Whether ``data_dir`` holds a CSV catalog or any parquet table
+    (checked before a Spark session is started)."""
+    from minisql_engine_spark.sources.parquet_catalog import TABLES
+
+    names = ["metadata.txt"] + [f"{t}.parquet" for t in TABLES]
+    return any(os.path.exists(os.path.join(data_dir, n)) for n in names)
+
+
 def _load(spark, data_dir: str) -> list[str]:
     from minisql_engine_spark.sources import load_csv_database, register_views
 
@@ -69,6 +78,9 @@ def main(argv: list[str] | None = None) -> int:
         help="directory of parquet tables or metadata.txt+CSVs",
     )
     args = parser.parse_args(argv)
+    if not _has_tables(args.data_dir):
+        print(f"error: no tables found in {args.data_dir}", file=sys.stderr)
+        return 2
 
     from minisql_engine_spark import get_spark
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.portable_round import (
     dsum as _dsum,
     fx6 as _fx6,
@@ -39,17 +40,6 @@ from minisql_engine_spark.operators.portable_round import (
 from pyspark.sql.window import Window
 
 from minisql_engine_spark.operators.text import _norm_text, _ws_tokens
-
-_NB_CACHE: list = []
-
-
-def clear_classify_cache() -> None:
-    """Release persisted token tables from prior calls."""
-    while _NB_CACHE:
-        try:
-            _NB_CACHE.pop().unpersist()
-        except Exception:
-            pass
 
 
 def nb_classify_self(
@@ -74,8 +64,7 @@ def nb_classify_self(
     )
     # two consumers below (accuracy aggregate + the crossJoin output)
     # — persist so the corpus-sized scoring subtree runs once
-    scored = scored.persist()
-    _NB_CACHE.append(scored)
+    scored = hold(scored.persist(), "classify")
     acc = scored.agg(
         _fx6(
             F.sum((F.col("predicted") == F.col("actual")).cast("int"))
@@ -96,14 +85,16 @@ def nb_train(
     "floor": (k, log_floor)}`` — all counts exact, all logs log2.
     Empty-text documents are excluded from both doc and token counts
     (they carry no evidence and would only skew the priors)."""
-    toks = docs.select(
-        F.col(id_col),
-        F.col(label_col).alias("k"),
-        F.explode(_ws_tokens(_norm_text(F.col(text_col)))).alias(
-            "token"
-        ),
-    ).persist()
-    _NB_CACHE.append(toks)
+    toks = hold(
+        docs.select(
+            F.col(id_col),
+            F.col(label_col).alias("k"),
+            F.explode(_ws_tokens(_norm_text(F.col(text_col)))).alias(
+                "token"
+            ),
+        ).persist(),
+        "classify",
+    )
 
     cls = toks.groupBy("k").agg(
         F.count_distinct(F.col(id_col)).cast("long").alias("n_docs")

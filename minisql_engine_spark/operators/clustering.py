@@ -54,19 +54,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# lifecycle parity with dedup.clear_simhash_cache /
-# similarity.clear_centroid_cache: connected_components holds its
-# intermediates as localCheckpoint RDDs, which Spark's ContextCleaner
-# releases once unreferenced — but the FINAL label table is returned
-# to (and kept alive by) the caller, so benchmarks/pipelines clear it
-# here between runs
-_CC_CACHE: list = []
-
-
-def clear_clustering_cache() -> None:
-    """Drop references to returned label tables so their checkpoint
-    RDDs become collectable."""
-    _CC_CACHE.clear()
+from minisql_engine_spark.materialize import hold
 
 
 def connected_components(
@@ -78,8 +66,8 @@ def connected_components(
     """(id, component) for every id appearing in ``pairs``; component
     is the minimum reachable id. The result is held as a materialized
     localCheckpoint (it is always consumed by at least one join and
-    usually several); drop the engine's reference via
-    ``clear_clustering_cache``."""
+    usually several), held as ``"clustering"``; the intermediate
+    rounds' checkpoints are left to Spark's ContextCleaner."""
     fwd = pairs.select(
         F.col(id_a).cast("long").alias("src"),
         F.col(id_b).cast("long").alias("dst"),
@@ -105,8 +93,7 @@ def connected_components(
     )
     prev_sum = comp.agg(F.sum("component")).first()[0]
     if prev_sum is None:  # empty graph
-        _CC_CACHE.append(comp)
-        return comp
+        return hold(comp, "clustering")
 
     for _ in range(max_iter):
         nbr = (
@@ -135,18 +122,17 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         new_sum = new_comp.agg(F.sum("component")).first()[0]
-        # only the FINAL table is retained in _CC_CACHE: rebinding
+        # only the FINAL table is held: rebinding
         # `comp` drops the previous round's only reference, so the
         # ContextCleaner can release each intermediate checkpoint RDD
         # as the loop advances (long-lived sessions would otherwise
         # accumulate one pinned RDD per iteration per call)
         comp = new_comp
         if new_sum == prev_sum:  # labels monotone ↓ ⇒ fixpoint
-            _CC_CACHE.append(comp)
-            return comp
+            return hold(comp, "clustering")
         prev_sum = new_sum
 
-    _CC_CACHE.append(comp)
+    hold(comp, "clustering")
     warnings.warn(
         f"connected_components: not converged after {max_iter} iterations "
         "(graph diameter exceeds max_iter); labels are a valid upper "
@@ -275,5 +261,4 @@ def connected_components_star(
         .select("id", F.col("id").alias("component"))
     )
     labels = base.union(isolated).distinct().localCheckpoint()
-    _CC_CACHE.append(labels)
-    return labels, rounds
+    return hold(labels, "clustering"), rounds

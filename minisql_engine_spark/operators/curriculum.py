@@ -44,32 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_CURRICULUM_CACHE: list[DataFrame] = []
-
-#: persisted sorted tables kept alive across calls. Each
-#: ``curriculum_order`` call EVICTS the oldest entry beyond this cap
-#: (unpersist degrades an older still-held result to recompute —
-#: positions stay identical because the sort key is total — so the
-#: cap bounds storage without a correctness risk).
-_CURRICULUM_CACHE_MAX = 2
-
-
-def clear_curriculum_cache() -> None:
-    """Release persisted sorted tables from prior calls."""
-    while _CURRICULUM_CACHE:
-        try:
-            _CURRICULUM_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
-
-def _cache_push(df: DataFrame) -> None:
-    _CURRICULUM_CACHE.append(df)
-    while len(_CURRICULUM_CACHE) > _CURRICULUM_CACHE_MAX:
-        try:
-            _CURRICULUM_CACHE.pop(0).unpersist()
-        except Exception:
-            pass
+from minisql_engine_spark.materialize import hold
 
 
 def curriculum_order(
@@ -87,10 +62,11 @@ def curriculum_order(
 
     EAGER: the call materializes the range-sorted table (persist +
     a partition-count-sized collect of per-shard counts) at call
-    time. The persisted table stays cached for reuse; the module
-    keeps at most ``_CURRICULUM_CACHE_MAX`` of them (older entries
-    are unpersisted automatically; ``clear_curriculum_cache()``
-    releases everything)."""
+    time. The persisted table stays cached for reuse; at most two
+    distinct ones are held (each call evicts the oldest beyond that:
+    an evicted result recomputes to identical positions because the
+    sort key is total, so the cap bounds storage without a
+    correctness risk)."""
     from minisql_engine_spark.operators.stats import (
         _pname,
         exact_quantiles,
@@ -122,16 +98,17 @@ def curriculum_order(
     # layout). The only collect is the per-shard count table —
     # partition-count-sized, never corpus-sized.
     order_bucket = F.col("bucket") if ascending else F.col("bucket").desc()
-    sorted_df = (
+    sorted_df = hold(
         out.repartitionByRange(order_bucket, F.col("priority"), F.col(id_col))
         .sortWithinPartitions(order_bucket, F.col("priority"), F.col(id_col))
         .withColumn("_pid", F.spark_partition_id().cast("bigint"))
         .withColumn(
             "_local", F.monotonically_increasing_id() % F.lit(1 << 33)
         )
-        .persist()
+        .persist(),
+        "curriculum",
+        keep_last=2,
     )
-    _cache_push(sorted_df)
     counts = sorted(
         (r["_pid"], r["n"])
         for r in sorted_df.groupBy("_pid")

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.portable_round import fx6 as _fx6
 
 # MinHash parameters: 8 hashes in 4 bands of 2 rows. Small on purpose:
@@ -42,24 +43,6 @@ from minisql_engine_spark.operators.portable_round import fx6 as _fx6
 # size. Parameterizable per call.
 NUM_HASHES = 8
 BAND_SIZE = 2
-
-# persisted dedup intermediates — simhash fingerprint indexes and
-# minhash shingle tables (see simhash_near_dups docstring for the
-# cache-lifecycle rationale; both are (re)built per corpus and read
-# by several join branches with different keys, so exchange reuse
-# cannot cover them)
-_FPS_CACHE: list = []
-
-
-def clear_simhash_cache() -> None:
-    """Release all persisted dedup intermediates (simhash
-    fingerprints, minhash shingle tables)."""
-    while _FPS_CACHE:
-        try:
-            _FPS_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
 
 # ---------------------------------------------------------------------------
 # Shared shingling
@@ -312,10 +295,12 @@ def minhash_lsh_dedup(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ex = shingle_table(df, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    ex = hold(
+        shingle_table(df, id_col, text_col).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
+        "dedup",
     )
-    _FPS_CACHE.append(ex)
     # The signature index is persisted too: min(<hex string>) is not
     # hash-agg-bufferable, so Spark computes it as a SortAggregate
     # over the full shingle table — and the LSH self-join would run
@@ -324,10 +309,12 @@ def minhash_lsh_dedup(
     # num_hashes result runs it once. (A 60-bit integer hash family
     # would make this a pure HashAggregate — kept hex-string so the
     # DuckDB oracle replays signatures byte-for-byte.)
-    sigs = minhash_signatures(df, id_col, text_col, shingles=ex).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sigs = hold(
+        minhash_signatures(df, id_col, text_col, shingles=ex).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
+        "dedup",
     )
-    _FPS_CACHE.append(sigs)
     pairs = lsh_candidate_pairs(lsh_band_keys(sigs, id_col), id_col)
     sizes = sigs.select(F.col(id_col), "n_sh")
     return jaccard_verify(ex, pairs, id_col, threshold=threshold, sizes=sizes)
@@ -490,7 +477,7 @@ def simhash_near_dups(
     cache) and MEMORY_AND_DISK entries are evictable under pressure —
     so entries are tracked but NOT eagerly unpersisted (doing so was
     measured to force a fingerprint recompute on back-to-back runs).
-    Call ``clear_simhash_cache()`` to release them explicitly.
+    ``materialize.release("dedup")`` releases them explicitly.
 
     Recall contract: Hamming distances up to ``n_chunks − combine``
     are GUARANTEED found (pigeonhole over clean chunks, modulo
@@ -513,10 +500,12 @@ def simhash_near_dups(
             stacklevel=2,
         )
 
-    fps = simhash_fingerprints(df, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    fps = hold(
+        simhash_fingerprints(df, id_col, text_col).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
+        "dedup",
     )
-    _FPS_CACHE.append(fps)
     chunks = simhash_band_keys(fps, id_col, n_chunks, combine)
     if bucket_cap is not None:
         from pyspark.sql import Window
@@ -840,10 +829,12 @@ def lsh_recall_audit(
     # shingles, the co-occurrence side, and the MinHash signatures) —
     # persist it exactly like minhash_lsh_dedup does, or the
     # tokenize+explode subtree executes once per consumer
-    sh = shingle_table(docs, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sh = hold(
+        shingle_table(docs, id_col, text_col).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
+        "dedup",
     )
-    _FPS_CACHE.append(sh)
     sizes = sh.groupBy(id_col).agg(
         F.count("*").cast("bigint").alias("n_sh")
     )

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.portable_round import (
     dsum_tf as _dsum_tf,
     fx6 as _fx6,
@@ -58,22 +59,6 @@ from minisql_engine_spark.operators.text import _norm_text, _ws_tokens
 
 #: md5 hex prefix length for the feature bucket: B = 16^DIGITS = 256
 DIGITS = 2
-
-# persisted (doc, bucket) feature-count tables: four consumers
-# (per-bucket target/raw counts, the totals row, the scoring join)
-# derive from it, so it materializes once per call. Lifecycle matches
-# the package convention: tracked, released via clear_dsir_cache().
-_DSIR_CACHE: list = []
-
-
-def clear_dsir_cache() -> None:
-    """Release persisted feature-count tables."""
-    while _DSIR_CACHE:
-        try:
-            _DSIR_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
 
 def _features(toks: Column) -> Column:
     """Unigrams + bigrams over an ALREADY-MATERIALIZED token array.
@@ -154,10 +139,12 @@ def dsir_weights(
     # guide §5). Counts are identical: count(instances) ≡ sum(tf).
     # (checkpointing `dtf` instead was measured and rejected; numbers
     # beside span_dedup's gram persist)
-    dtf = feats.groupBy(id_col, "is_target", "bucket").agg(
-        F.count("*").cast("bigint").alias("tf")
-    ).persist()
-    _DSIR_CACHE.append(dtf)
+    dtf = hold(
+        feats.groupBy(id_col, "is_target", "bucket").agg(
+            F.count("*").cast("bigint").alias("tf")
+        ).persist(),
+        "dsir",
+    )
 
     tgt = dtf.filter("is_target").groupBy("bucket").agg(
         F.sum("tf").cast("bigint").alias("ct")

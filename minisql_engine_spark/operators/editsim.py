@@ -36,20 +36,7 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# persisted deletion-neighborhood tables (the SymSpell "dictionary"):
-# the self-join consumes the variant table on BOTH sides, so without a
-# persist Spark evaluates the explode subtree twice. Lifecycle matches
-# operators/dedup.py: tracked, released via clear_editsim_cache().
-_VAR_CACHE: list = []
-
-
-def clear_editsim_cache() -> None:
-    """Release persisted variant tables."""
-    while _VAR_CACHE:
-        try:
-            _VAR_CACHE.pop().unpersist()
-        except Exception:
-            pass
+from minisql_engine_spark.materialize import hold
 
 
 def _delete_variants(s: Column, d: int) -> Column:
@@ -113,17 +100,22 @@ def edit_distance_pairs(
     # are both unchanged.
     from pyspark.storagelevel import StorageLevel
 
-    var = base.select(
-        "_id",
-        "_s",
-        F.explode(
-            F.transform(
-                _delete_variants(F.col("_s"), max_dist),
-                lambda v: F.xxhash64(v),
-            )
-        ).alias("_v"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _VAR_CACHE.append(var)
+    # the deletion-neighborhood table (the SymSpell "dictionary") is
+    # persisted: the self-join consumes it on BOTH sides, so without
+    # it Spark evaluates the explode subtree twice
+    var = hold(
+        base.select(
+            "_id",
+            "_s",
+            F.explode(
+                F.transform(
+                    _delete_variants(F.col("_s"), max_dist),
+                    lambda v: F.xxhash64(v),
+                )
+            ).alias("_v"),
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+        "editsim",
+    )
     if max_group is not None:
         from pyspark.sql.window import Window
 

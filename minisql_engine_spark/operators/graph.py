@@ -50,27 +50,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import hold
+
 #: fixed-point scale: 1.0 of rank mass = 10**12 units
 SCALE = 10**12
 #: damping as a rational — numerator / denominator of d
 DAMP_NUM = 85
 DAMP_DEN = 100
-
-# lifecycle parity with clustering._CC_CACHE: the persisted edge list
-# and the returned (localCheckpoint-backed) rank table are held here
-# so benchmarks can release them between runs
-_PR_CACHE: list = []
-
-
-def clear_graph_cache() -> None:
-    """Unpersist cached edge lists / drop rank-table references."""
-    for df in _PR_CACHE:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _PR_CACHE.clear()
-
 
 def pagerank(
     edges: DataFrame,
@@ -117,26 +103,25 @@ def pagerank(
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weight is not None:
         cols.append(F.col(weight).cast("long").alias("w"))
-    e = edges.select(*cols).persist()
-    _PR_CACHE.append(e)
+    e = hold(edges.select(*cols).persist(), "graph")
     # unweighted = all-ones weights: deg doubles as W_u either way
     wsum = F.sum("w") if weight is not None else F.count("*")
     deg = e.groupBy("src").agg(wsum.cast("long").alias("deg"))
     # edges carry their out-degree so each iteration is ONE join with
     # the rank table, not two
-    ed = e.join(deg, "src").persist()
-    _PR_CACHE.append(ed)
+    ed = hold(e.join(deg, "src").persist(), "graph")
     # nodes are consumed once per iteration (the left join) —
     # localCheckpoint so the per-iteration plan reads a materialized
     # table instead of re-running the distinct subtree every round
     # (measured: 9.1 s → see PLANS_r8; same lineage rule as
     # clustering.py). Lazy: the node-count action right below
     # materializes the blocks, so setup schedules ONE job.
-    nodes = (
+    nodes = hold(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False),
+        "graph",
     )
 
     # N is ONE long fetched to the driver; teleport and r0 become
@@ -193,8 +178,7 @@ def pagerank(
         # materialize inside the consumer's one action instead of a
         # scheduled job per checkpoint (guide §2.4: fewer actions).
         if (it + 1) % 3 == 0 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    _PR_CACHE.append(ranks)
+            ranks = hold(ranks.localCheckpoint(eager=False), "graph")
     return ranks.select("node", F.col("rank").alias("pr_units"))
 
 

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.portable_round import (
     dsum as _dsum,
     dsum_sql as _dsum_sql,
@@ -46,24 +47,6 @@ from minisql_engine_spark.operators.portable_round import (
 from minisql_engine_spark.operators.text import _norm_text, _ws_tokens
 
 DIM = 64
-
-# persisted (doc, token, tf) tables: the tf aggregate feeds BOTH the
-# doc-frequency aggregate and the idf join, and Spark's ReuseExchange
-# does not dedupe the shared subtree (verified empirically — the
-# explode ran twice), so it is persisted like the dedup shingle table.
-# Lifecycle matches operators/dedup.py: tracked, released via
-# clear_hashvec_cache().
-_TF_CACHE: list = []
-
-
-def clear_hashvec_cache() -> None:
-    """Release persisted tf tables."""
-    while _TF_CACHE:
-        try:
-            _TF_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
 
 def hashed_tfidf(
     docs: DataFrame,
@@ -82,12 +65,16 @@ def hashed_tfidf(
     )
     from pyspark.storagelevel import StorageLevel
 
-    tf = (
+    # the tf aggregate feeds BOTH the doc-frequency aggregate and the
+    # idf join, and Spark's ReuseExchange does not dedupe the shared
+    # subtree (verified empirically — the explode ran twice), so it is
+    # persisted like the dedup shingle table
+    tf = hold(
         toks.groupBy(id_col, "t")
         .agg(F.count("*").alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK),
+        "hashvec",
     )
-    _TF_CACHE.append(tf)
     # doc-frequency from the persisted tf table, not a second explode
     # pass: tf holds one row per (doc, token), so count(*) per token
     # IS count(DISTINCT doc) over the raw tokens. The df table is

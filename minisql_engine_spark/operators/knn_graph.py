@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.similarity import (
     DUCK_COS,
     N_CELLS,
@@ -55,63 +56,7 @@ from minisql_engine_spark.operators.similarity import (
     ivf_refined_centroids,
     norm_sql,
     score_sql,
-    _CENT_CACHE,
 )
-
-_KNN_CACHE: list[DataFrame] = []
-
-#: persisted corpus-sized assignment tables kept alive across calls.
-#: These must NOT ride in similarity._CENT_CACHE (documented for
-#: tiny centroid tables — ADVICE r10): repeated knn_graph calls
-#: would accumulate unbounded corpus-scale persisted storage. Each
-#: call evicts beyond this cap; eviction degrades an older
-#: still-held graph to recompute (assignments are deterministic), so
-#: the cap bounds storage without a correctness risk.
-_KNN_CACHE_MAX = 2
-
-
-def clear_knn_cache() -> None:
-    """Release persisted assignment tables from prior calls."""
-    while _KNN_CACHE:
-        try:
-            _KNN_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
-
-def _same_plan(a: DataFrame, b: DataFrame) -> bool:
-    """Whether two DataFrames denote the same analyzed plan (Spark's
-    ``sameResult`` — the predicate its CacheManager uses for cache
-    hits)."""
-    try:
-        return bool(
-            a._jdf.queryExecution()
-            .analyzed()
-            .sameResult(b._jdf.queryExecution().analyzed())
-        )
-    except Exception:
-        return False
-
-
-def _knn_cache_push(df: DataFrame) -> None:
-    """Track a persisted assignment table, DEDUPED by logical plan.
-
-    Spark's cache is keyed by plan, not by DataFrame object: two
-    calls with identical inputs persist into ONE shared cache entry,
-    and unpersisting either instance drops it for both. Without the
-    dedupe, the warm→timed call pattern pushes same-plan duplicates
-    until the cap evicts one — silently nuking the entry the live
-    call was reusing (measured as knn_graph_refine's run-over-run
-    4.2 s → 6.5 s decay). Same-plan pushes are no-ops; eviction
-    therefore only ever unpersists genuinely distinct plans."""
-    if any(_same_plan(df, held) for held in _KNN_CACHE):
-        return
-    _KNN_CACHE.append(df)
-    while len(_KNN_CACHE) > _KNN_CACHE_MAX:
-        try:
-            _KNN_CACHE.pop(0).unpersist()
-        except Exception:
-            pass
 
 
 def knn_graph(
@@ -129,24 +74,31 @@ def knn_graph(
     nearest IVF cells."""
     if k < 1 or n_probe < 1:
         raise ValueError(f"need k >= 1 and n_probe >= 1, got {k}, {n_probe}")
-    cents = ivf_refined_centroids(
-        embeddings, id_col, vec_col, n_cells=n_cells, n_iter=n_iter,
-        dims=dims,
-    ).persist()
     # two assignment branches (home + probe) consume the centroid
-    # table; without the persist each re-runs the Lloyd chain.
-    # Released via similarity.clear_centroid_cache().
-    _CENT_CACHE.append(cents)
+    # table; without the persist each re-runs the Lloyd chain
+    cents = hold(
+        ivf_refined_centroids(
+            embeddings, id_col, vec_col, n_cells=n_cells, n_iter=n_iter,
+            dims=dims,
+        ).persist(),
+        "centroids",
+    )
 
     # ONE assignment pass serves both sides: the probe ranks already
     # contain the home cell (cell_rank = 1 is the same argmax with
     # the same (sim DESC, cell) tie-break the packed n_probe=1 path
     # certifies) — a separate home pass would re-score the whole
     # corpus against the centroids. Persisted: two consumers below.
-    assign = ivf_assignments(
-        embeddings, cents, id_col, vec_col, n_probe=n_probe
-    ).persist()
-    _knn_cache_push(assign)
+    # Corpus-sized, so unlike the tiny centroid tables at most two
+    # distinct ones stay held across calls (an evicted older graph
+    # recomputes: assignments are deterministic).
+    assign = hold(
+        ivf_assignments(
+            embeddings, cents, id_col, vec_col, n_probe=n_probe
+        ).persist(),
+        "knn",
+        keep_last=2,
+    )
     home = assign.filter(F.col("cell_rank") == 1).select(
         F.col(id_col).alias("nbr_id"), "cell"
     )

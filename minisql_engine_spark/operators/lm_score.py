@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.portable_round import (
     dsum as _dsum,
     dsum_tf as _dsum_tf,
@@ -171,17 +172,6 @@ def lm_perplexity_sql(
 # Interpolated bigram LM (KenLM-lite)
 # ---------------------------------------------------------------------------
 
-_LM_CACHE: list = []
-
-
-def clear_lm_cache() -> None:
-    """Release positional token tables persisted by prior calls."""
-    while _LM_CACHE:
-        try:
-            _LM_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
 
 def lm_bigram_perplexity(
     docs: DataFrame,
@@ -221,16 +211,16 @@ def lm_bigram_perplexity(
     # three joins): fanning the input to 32 partitions multiplied the
     # AQE stage bookkeeping on every one of those exchanges for no
     # map-side win. The single-scan shape stays.
-    toks = (
+    toks = hold(
         docs.select(
             F.col(id_col),
             F.posexplode(
                 _ws_tokens(_norm_text(F.col(text_col)))
             ).alias("pos", "token"),
         )
-        .persist()
+        .persist(),
+        "lm",
     )
-    _LM_CACHE.append(toks)
     c1 = toks.groupBy("token").agg(
         F.count("*").cast("bigint").alias("c1")
     )

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.portable_round import (
     dsum as _dsum,
     dsum_sql as _dsum_sql,
@@ -56,17 +57,6 @@ from minisql_engine_spark.operators.text import _norm_text, _ws_tokens
 
 K1 = 1.2
 B = 0.75
-
-_TF_CACHE: list = []
-
-
-def clear_retrieval_cache() -> None:
-    """Release persisted tf tables from prior calls."""
-    while _TF_CACHE:
-        try:
-            _TF_CACHE.pop().unpersist()
-        except Exception:
-            pass
 
 
 def bm25_topk(
@@ -109,10 +99,8 @@ def bm25_topk(
     # the corpus explode+aggregate once per consumer (measured: 11
     # exchanges, ~4 document scans). Persist it — the (doc, token)
     # aggregate is the retrieval index, and multi-consumer reuse IS
-    # the usage pattern (same lifecycle rule as the IVF centroid and
-    # simhash caches; release via clear_retrieval_cache).
-    tf = tf.persist()
-    _TF_CACHE.append(tf)
+    # the usage pattern.
+    tf = hold(tf.persist(), "retrieval")
     # dl reuses the tf aggregate (no second pass over exploded rows)
     dl = tf.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
     # N + avgdl in ONE single-row aggregate, cross-joined (1-row BNLJ)

@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.clustering import connected_components
 from minisql_engine_spark.operators.similarity import (
     DUCK_COS,
@@ -61,17 +62,6 @@ from minisql_engine_spark.operators.similarity import (
     ivf_refined_centroids,
     ivf_refine_ctes_sql,
 )
-
-_SEM_CACHE: list = []
-
-
-def clear_semdedup_cache() -> None:
-    """Release persisted assignment tables from prior calls."""
-    while _SEM_CACHE:
-        try:
-            _SEM_CACHE.pop().unpersist()
-        except Exception:
-            pass
 
 
 def auto_n_cells(n: int) -> int:
@@ -131,10 +121,8 @@ def semantic_dedup(
         embeddings, cents, id_col, vec_col, n_probe=1, keep_vec=True
     ).select(id_col, "cell", "v")
     # assignment feeds the pair search AND the final roster — persist
-    # so the Lloyd subtree executes once (released via
-    # clear_semdedup_cache, same lifecycle as the centroid cache)
-    assign = assign.persist()
-    _SEM_CACHE.append(assign)
+    # so the Lloyd subtree executes once
+    assign = hold(assign.persist(), "semdedup")
 
     blocked = assign.select(id_col, F.col("v").alias(vec_col), "cell")
     pairs = embedding_near_dups(
@@ -286,8 +274,7 @@ def semantic_dedup_keep_farthest(
         embeddings, cents, id_col, vec_col, n_probe=1, with_sim=True,
         keep_vec=True,
     ).select(id_col, "cell", "sim_fx6", "v")
-    assign = assign.persist()
-    _SEM_CACHE.append(assign)
+    assign = hold(assign.persist(), "semdedup")
 
     blocked = assign.select(id_col, F.col("v").alias(vec_col), "cell")
     pairs = embedding_near_dups(

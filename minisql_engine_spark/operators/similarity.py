@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import hold
+
 N_TABLES = 8  # independent LSH tables (OR-amplification)
 N_PLANES = 4  # hyperplanes per table (AND-amplification) → 16 buckets each
 
@@ -782,19 +784,6 @@ def kmeans_parallel_seeds(
     )
 
 
-# persisted refined-centroid tables (see ivf_topk docstring)
-_CENT_CACHE: list = []
-
-
-def clear_centroid_cache() -> None:
-    """Release all persisted refined-centroid tables."""
-    while _CENT_CACHE:
-        try:
-            _CENT_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
-
 def ivf_refined_centroids(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -1007,11 +996,13 @@ def ivf_topk(
     if refine_iters > 0:
         from pyspark.storagelevel import StorageLevel
 
-        cents = ivf_refined_centroids(
-            embeddings, id_col, vec_col, n_cells,
-            n_iter=refine_iters, seed=seed,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _CENT_CACHE.append(cents)
+        cents = hold(
+            ivf_refined_centroids(
+                embeddings, id_col, vec_col, n_cells,
+                n_iter=refine_iters, seed=seed,
+            ).persist(StorageLevel.MEMORY_AND_DISK),
+            "centroids",
+        )
     else:
         cents = ivf_centroids(embeddings, id_col, vec_col, n_cells)
     corpus_cells = ivf_assignments(

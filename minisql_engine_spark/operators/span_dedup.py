@@ -40,29 +40,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.text import _norm_text, _ws_tokens
 
 K_TOKENS = 10     # span granularity (minimum detectable span length)
 MIN_COUNT = 2     # corpus occurrences for a window to count as duplicated
-
-# persisted positional-gram tables: the gram relation feeds BOTH the
-# corpus-wide count aggregate and the mark-back join, and building it
-# (tokenize + one md5 per token position) is the operator's dominant
-# map cost — without a persist the whole projection executes twice
-# (measured: the lsh_recall_audit shingle pattern, r14 §2). Lifecycle
-# matches operators/dedup._FPS_CACHE: tracked, released via
-# clear_span_cache().
-_GRAM_CACHE: list = []
-
-
-def clear_span_cache() -> None:
-    """Release persisted positional-gram tables."""
-    while _GRAM_CACHE:
-        try:
-            _GRAM_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
 
 def duplicate_spans(
     docs: DataFrame,
@@ -100,7 +82,7 @@ def duplicate_spans(
 
     from minisql_engine_spark.fanout import fan_out
 
-    pos_grams = (
+    pos_grams = hold(
         # tokenize + one md5 per token position is the dominant map
         # cost — fan the (id, text) projection out so it runs on
         # every core instead of the single-row-group scan's one task
@@ -123,9 +105,9 @@ def duplicate_spans(
         # run-to-run spread, an 11% job cut (the accept bar is 25%),
         # and this standalone operator would run its shuffles when
         # called.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK),
+        "span_dedup",
     )
-    _GRAM_CACHE.append(pos_grams)
     counts = pos_grams.groupBy("g").agg(F.count("*").alias("_n"))
     dup_grams = counts.filter(F.col("_n") >= min_count).select("g")
     marked = pos_grams.join(dup_grams, "g").select(

@@ -39,18 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from minisql_engine_spark.materialize import hold
 from minisql_engine_spark.operators.similarity import _as_double
-
-_SQ_CACHE: list = []
-
-
-def clear_sq_cache() -> None:
-    """Release persisted code tables from prior calls."""
-    while _SQ_CACHE:
-        try:
-            _SQ_CACHE.pop().unpersist()
-        except Exception:
-            pass
 
 
 def sq8_codebook(
@@ -141,8 +131,7 @@ def sq8_topk(
     )
 
     cb = sq8_codebook(emb, vec_col)
-    codes = sq8_encode(emb, cb, id_col, vec_col).persist()
-    _SQ_CACHE.append(codes)
+    codes = hold(sq8_encode(emb, cb, id_col, vec_col).persist(), "sq")
     # norms once per row below the pair join (cosine_pre rule): the
     # q × corpus scoring pass pays 1 fold per pair instead of 3
     deq = codes.crossJoin(F.broadcast(cb)).select(

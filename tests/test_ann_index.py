@@ -13,10 +13,8 @@ from minisql_engine_spark.operators.ann_index import (
     ivf_index_topk,
     write_ivf_index,
 )
-from minisql_engine_spark.operators.similarity import (
-    clear_centroid_cache,
-    ivf_topk,
-)
+from minisql_engine_spark.materialize import release
+from minisql_engine_spark.operators.similarity import ivf_topk
 from minisql_engine_spark.sources import load_table
 
 QUERY_IDS = [0, 1, 2, 3, 4]
@@ -31,7 +29,7 @@ def index_path(tmp_path_factory):
 def built(spark, sf_dir, index_path):
     emb = load_table(spark, sf_dir, "embeddings")
     write_ivf_index(emb, index_path, refine_iters=2)
-    clear_centroid_cache()
+    release("centroids")
     return index_path
 
 
@@ -56,7 +54,7 @@ def test_index_search_equals_in_memory(spark, sf_dir, built):
         tuple(r)
         for r in ivf_topk(emb, QUERY_IDS, k=10, refine_iters=2).collect()
     )
-    clear_centroid_cache()
+    release("centroids")
     assert from_index == in_memory
     assert len(from_index) == len(QUERY_IDS) * 10
 
@@ -71,7 +69,7 @@ def test_search_scan_is_partition_pruned(spark, sf_dir, built):
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    clear_centroid_cache()
+    release("centroids")
     assert "PartitionFilters" in plan
     # the corpus scan must carry a dynamic/explicit cell filter, not
     # scan all partitions: look for the cell column in a partition
@@ -119,7 +117,7 @@ def test_incremental_append_equals_full_build(spark, sf_dir, tmp_path):
         tuple(r)
         for r in ivf_index_topk(spark, full_path, queries, k=10).collect()
     )
-    clear_centroid_cache()
+    release("centroids")
     assert a == b
     assert len(a) == len(QUERY_IDS) * 10
 
@@ -154,7 +152,7 @@ def test_compaction_after_appends_preserves_search_parity(
     extra2 = emb.filter(F.col("vec_id") >= 1500)
     path = str(tmp_path / "grown")
     write_ivf_index(base, path, refine_iters=2)
-    clear_centroid_cache()
+    release("centroids")
     append_to_ivf_index(extra1, path)
     append_to_ivf_index(extra2, path)
 
@@ -169,7 +167,7 @@ def test_compaction_after_appends_preserves_search_parity(
 
     # over-threshold: re-clusters, reports drift both sides
     rep = compact_ivf_index(spark, path, max_cell_size=big - 1)
-    clear_centroid_cache()
+    release("centroids")
     assert rep["compacted"] is True
     assert rep["mean_dist_before"] >= 0.0
     assert rep["mean_dist_after"] is not None
@@ -190,5 +188,5 @@ def test_compaction_after_appends_preserves_search_parity(
         tuple(r)
         for r in ivf_topk(emb, QUERY_IDS, k=10, refine_iters=2).collect()
     )
-    clear_centroid_cache()
+    release("centroids")
     assert from_index == in_memory

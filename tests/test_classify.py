@@ -6,8 +6,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import release
 from minisql_engine_spark.operators.classify import (
-    clear_classify_cache,
     nb_classify_self,
     nb_score,
     nb_train,
@@ -32,7 +32,7 @@ def test_planted_signal_perfect_in_sample(spark):
     assert len(out) == 30
     assert all(r["correct"] for r in out)
     assert all(r["accuracy"] == 1.0 for r in out)
-    clear_classify_cache()
+    release("classify")
 
 
 def test_unseen_evidence_scores_at_the_smoothed_floor(spark):
@@ -57,7 +57,7 @@ def test_unseen_evidence_scores_at_the_smoothed_floor(spark):
     assert want_sml > want_big
     assert out[0]["predicted"] == "sml"
     assert out[0]["score"] == want_sml
-    clear_classify_cache()
+    release("classify")
 
 
 def test_heldout_split_scores_every_doc_once(spark):
@@ -75,7 +75,7 @@ def test_heldout_split_scores_every_doc_once(spark):
     out = nb_score(test, model).collect()
     assert len(out) == 6
     assert all(r["correct"] for r in out)
-    clear_classify_cache()
+    release("classify")
 
 
 def test_score_arithmetic_matches_python(spark):
@@ -100,11 +100,11 @@ def test_score_arithmetic_matches_python(spark):
     assert out[1]["predicted"] == ("a" if s1a >= s1b else "b")
     assert out[1]["score"] == max(s1a, s1b)
     assert out[1]["correct"] is True
-    clear_classify_cache()
+    release("classify")
 
 
 def test_empty_text_docs_are_excluded(spark):
     rows = [(1, "a", "foo foo"), (2, "a", ""), (3, "b", "bar")]
     out = nb_classify_self(_docs(spark, rows)).collect()
     assert sorted(r["doc_id"] for r in out) == [1, 3]
-    clear_classify_cache()
+    release("classify")

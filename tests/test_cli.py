@@ -39,6 +39,16 @@ def test_one_shot_unknown_column_exits_nonzero():
     assert "error:" in r.stderr and "`Z`" in r.stderr
 
 
+def test_data_dir_without_tables_is_an_error(tmp_path, capsys):
+    """A --data-dir with neither metadata.txt nor any table fails up
+    front instead of failing every query later."""
+    from minisql_engine_spark.cli import main
+
+    assert main(["--data-dir", str(tmp_path), "select 1"]) == 2
+    assert capsys.readouterr().err == f"error: no tables found in {tmp_path}\n"
+    assert main(["--data-dir", str(tmp_path / "absent"), "select 1"]) == 2
+
+
 # --- O19 byte-format parity: the reference's AsciiTable grid ---------------
 
 GOLDEN_SELECT_A = """\

@@ -7,8 +7,8 @@ import pytest
 
 pytestmark = pytest.mark.driver_gate
 
+from minisql_engine_spark.materialize import release
 from minisql_engine_spark.operators.clustering import (
-    clear_clustering_cache,
     connected_components,
     dedup_clusters,
 )
@@ -17,7 +17,7 @@ from minisql_engine_spark.operators.clustering import (
 @pytest.fixture(autouse=True)
 def _release_cache():
     yield
-    clear_clustering_cache()
+    release("clustering")
 
 
 def _components(spark, pairs):
@@ -142,7 +142,7 @@ def test_cc_equals_union_find(spark, pairs):
         r["id"]: r["component"]
         for r in connected_components(df).collect()
     }
-    clear_clustering_cache()
+    release("clustering")
     assert got == _union_find_components(pairs)
 
 
@@ -150,8 +150,8 @@ def test_cc_equals_union_find(spark, pairs):
 
 
 def test_star_contraction_equals_propagation_basic(spark):
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.clustering import (
-        clear_clustering_cache,
         connected_components,
         connected_components_star,
     )
@@ -169,15 +169,15 @@ def test_star_contraction_equals_propagation_basic(spark):
     assert (5, 5) in got
     assert got == want
     assert rounds <= 5
-    clear_clustering_cache()
+    release("clustering")
 
 
 def test_star_contraction_chain_is_logarithmic(spark):
     """A 60-node path needs ~60 label-propagation rounds but only
     O(log n) contraction rounds — the adversarial-diameter scale
     claim, measured."""
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.clustering import (
-        clear_clustering_cache,
         connected_components_star,
     )
 
@@ -190,12 +190,12 @@ def test_star_contraction_chain_is_logarithmic(spark):
     assert {r["component"] for r in rows} == {0}
     assert len(rows) == n + 1
     assert rounds <= 14, rounds
-    clear_clustering_cache()
+    release("clustering")
 
 
 def test_star_contraction_empty_and_single_edge(spark):
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.clustering import (
-        clear_clustering_cache,
         connected_components_star,
     )
 
@@ -207,4 +207,4 @@ def test_star_contraction_empty_and_single_edge(spark):
     assert {
         (r["id"], r["component"]) for r in labels.collect()
     } == {(7, 3), (3, 3)}
-    clear_clustering_cache()
+    release("clustering")

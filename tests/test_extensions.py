@@ -260,9 +260,9 @@ def test_kmeans_parallel_seeding(spark, sf_dir):
     cells with query neighborhoods by construction (measured at
     sf0.1: 0.96 seed-coincident vs 0.33 disjoint) — recall must not
     regress vs the default seeding."""
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.similarity import (
         brute_force_topk,
-        clear_centroid_cache,
         ivf_topk,
         kmeans_parallel_seeds,
     )
@@ -286,7 +286,7 @@ def test_kmeans_parallel_seeding(spark, sf_dir):
                 emb, qids, k=10, refine_iters=2, seed=seed
             ).collect()
         }
-        clear_centroid_cache()
+        release("centroids")
         recall[seed] = len(truth & got) / len(truth)
     # deterministic pipelines → these are exact numbers, not noise;
     # the bar is non-regression with headroom for future data regen

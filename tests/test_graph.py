@@ -4,11 +4,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import release
 from minisql_engine_spark.operators.graph import (
     DAMP_DEN,
     DAMP_NUM,
     SCALE,
-    clear_graph_cache,
     pagerank,
 )
 
@@ -49,7 +49,7 @@ def test_pagerank_matches_python_replay(spark):
         for r in pagerank(df, n_iter=5).collect()
     }
     assert got == _py_pagerank(edges, 5)
-    clear_graph_cache()
+    release("graph")
 
 
 def test_pagerank_uniform_on_regular_graph(spark):
@@ -59,7 +59,7 @@ def test_pagerank_uniform_on_regular_graph(spark):
     df = spark.createDataFrame(_sym(cyc), "src string, dst string")
     ranks = [r["pr_units"] for r in pagerank(df, n_iter=4).collect()]
     assert len(set(ranks)) == 1
-    clear_graph_cache()
+    release("graph")
 
 
 def test_pagerank_hub_outranks_leaves(spark):
@@ -70,7 +70,7 @@ def test_pagerank_hub_outranks_leaves(spark):
         for r in pagerank(df, n_iter=6).collect()
     }
     assert all(got["hub"] > got[f"leaf{i}"] for i in range(8))
-    clear_graph_cache()
+    release("graph")
 
 
 def test_pagerank_mass_conservation_bound(spark):
@@ -84,7 +84,7 @@ def test_pagerank_mass_conservation_bound(spark):
     # edge (contribution): leak < (n + m) per iteration, plus the
     # initial SCALE // n remainder
     assert SCALE - (n + m + 1) * (iters + 1) <= total <= SCALE
-    clear_graph_cache()
+    release("graph")
 
 
 def test_pagerank_directed_dangling_leaks_but_finite(spark):
@@ -100,7 +100,7 @@ def test_pagerank_directed_dangling_leaks_but_finite(spark):
     assert set(got) == {"a", "b", "z"}
     assert all(0 < v <= SCALE for v in got.values())
     assert got["z"] == max(got.values())
-    clear_graph_cache()
+    release("graph")
 
 
 def test_pagerank_zero_iters_is_uniform_init(spark):
@@ -112,7 +112,7 @@ def test_pagerank_zero_iters_is_uniform_init(spark):
         for r in pagerank(df, n_iter=0).collect()
     }
     assert got == {"a": SCALE // 3, "b": SCALE // 3, "c": SCALE // 3}
-    clear_graph_cache()
+    release("graph")
 
 
 def _py_pagerank_weighted(edges: list, n_iter: int) -> dict:
@@ -162,7 +162,7 @@ def test_weighted_pagerank_three_way_parity(spark):
     )
     duck = {n: r for n, r in duckdb.connect().execute(sql).fetchall()}
     assert duck == want
-    clear_graph_cache()
+    release("graph")
 
 
 def test_weighted_equals_unweighted_on_uniform_weights(spark):
@@ -178,4 +178,4 @@ def test_weighted_equals_unweighted_on_uniform_weights(spark):
     gw = {r["node"]: r["pr_units"] for r in pagerank(dfw, n_iter=3, weight="w").collect()}
     gu = {r["node"]: r["pr_units"] for r in pagerank(dfu, n_iter=3).collect()}
     assert gw == gu
-    clear_graph_cache()
+    release("graph")

@@ -39,24 +39,28 @@ def test_knn_graph_contracts(spark, sf_dir):
 
 
 def test_knn_graph_cache_bounded(spark, sf_dir):
-    """ADVICE r10: the corpus-sized assignment persist must live in
-    knn_graph's own BOUNDED cache, not similarity._CENT_CACHE —
+    """ADVICE r10: the corpus-sized assignment persist must be held
+    BOUNDED under its own owner, not with the centroid tables —
     repeated calls must not accumulate unbounded persisted storage."""
-    from minisql_engine_spark.operators import knn_graph as kg
-    from minisql_engine_spark.operators.similarity import _CENT_CACHE
+    from minisql_engine_spark.materialize import _HELD, held, release
+    from minisql_engine_spark.operators.knn_graph import N_CELLS
 
-    kg.clear_knn_cache()
-    cents_before = len(_CENT_CACHE)
+    def count(owner):
+        return sum(1 for o, _ in held() if o == owner)
+
+    release("knn")
+    cents_before = count("centroids")
     emb = load_table(spark, sf_dir, "embeddings")
     for _ in range(3):
         knn_graph(emb, k=3).count()
-    assert len(kg._KNN_CACHE) <= kg._KNN_CACHE_MAX
-    # only the tiny centroid tables ride the centroid cache
-    assert len(_CENT_CACHE) - cents_before == 3
-    for cached in _CENT_CACHE[cents_before:]:
-        assert cached.count() <= kg.N_CELLS
-    kg.clear_knn_cache()
-    assert not kg._KNN_CACHE
+    assert count("knn") <= 2
+    # only the tiny centroid tables are held as centroids
+    assert count("centroids") - cents_before == 3
+    cents = [df for o, _, df in _HELD if o == "centroids"]
+    for cached in cents[cents_before:]:
+        assert cached.count() <= N_CELLS
+    release("knn")
+    assert count("knn") == 0
 
 
 def test_knn_graph_single_cell_is_exact(spark, duck):

@@ -6,8 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import release
 from minisql_engine_spark.operators.lm_score import (
-    clear_lm_cache,
     lm_bigram_perplexity,
     lm_bigram_perplexity_sql,
     lm_perplexity,
@@ -19,7 +19,7 @@ from tests.conftest import assert_matches_oracle
 @pytest.fixture(autouse=True)
 def _release_cache():
     yield
-    clear_lm_cache()
+    release("lm")
 
 
 def test_bigram_oracle_corpus(spark, duck, sf_dir):

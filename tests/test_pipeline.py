@@ -2,23 +2,27 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from minisql_engine_spark.operators.clustering import clear_clustering_cache
-from minisql_engine_spark.operators.dedup import (
-    clear_simhash_cache,
-    minhash_lsh_dedup,
-)
+from minisql_engine_spark.materialize import release
+from minisql_engine_spark.operators.dedup import minhash_lsh_dedup
 from minisql_engine_spark.pipeline import curate_corpus
 from minisql_engine_spark.sources import load_table
 
 
+@pytest.fixture(autouse=True)
+def _release_held():
+    # after the test, not after the collect: a curated frame reads
+    # the clustering checkpoint, which cannot be recomputed once freed
+    yield
+    release("dedup")
+    release("clustering")
+
+
 def _curated(spark, sf_dir, **kw):
     out = curate_corpus(load_table(spark, sf_dir, "documents"), **kw)
-    rows = out.collect()
-    clear_simhash_cache()
-    clear_clustering_cache()
-    return out, rows
+    return out, out.collect()
 
 
 def test_no_exact_dups_survive(spark, sf_dir):
@@ -35,7 +39,6 @@ def test_no_near_dups_survive(spark, sf_dir):
     leftover = minhash_lsh_dedup(
         out.select("doc_id", "text"), threshold=0.5
     ).count()
-    clear_simhash_cache()
     assert leftover == 0
 
 

@@ -139,15 +139,13 @@ def test_simhash_dedups_verified_output_not_candidates(spark, sf_dir):
     """The pair distinct must sit ABOVE the Hamming filter (dedup of
     the small verified output), not below it (shuffle of the full
     candidate set — measured ~50× more rows at sf0.1)."""
-    from minisql_engine_spark.operators.dedup import (
-        clear_simhash_cache,
-        simhash_near_dups,
-    )
+    from minisql_engine_spark.materialize import release
+    from minisql_engine_spark.operators.dedup import simhash_near_dups
 
     docs = load_table(spark, sf_dir, "documents")
     out = simhash_near_dups(docs, max_hamming=3, n_chunks=8, combine=2)
     opt = out._jdf.queryExecution().optimizedPlan().toString()
-    clear_simhash_cache()
+    release("dedup")
     first_agg = opt.index("Aggregate")
     # the topmost Aggregate (the distinct) must carry the hamming
     # column, i.e. it deduplicates verified (id_a, id_b, hamming)
@@ -160,15 +158,13 @@ def test_minhash_persists_shingles_and_signatures(spark, sf_dir):
     """Both dedup indexes (shingle table, signature table) must read
     from the cache in the final pipeline plan — each feeds multiple
     join branches whose different keys defeat exchange reuse."""
-    from minisql_engine_spark.operators.dedup import (
-        clear_simhash_cache,
-        minhash_lsh_dedup,
-    )
+    from minisql_engine_spark.materialize import release
+    from minisql_engine_spark.operators.dedup import minhash_lsh_dedup
 
     docs = load_table(spark, sf_dir, "documents")
     out = minhash_lsh_dedup(docs)
     plan = plan_of(out)
-    clear_simhash_cache()
+    release("dedup")
     assert plan.count("InMemoryTableScan") >= 3  # sigs ×2 sides + shingles
 
 
@@ -438,10 +434,8 @@ def test_hashvec_explode_paid_once(spark, sf_dir):
     idf join from the persisted store — Spark's ReuseExchange does
     NOT dedupe the shared subtree (measured), so without the persist
     the token explode would execute twice."""
-    from minisql_engine_spark.operators.hashvec import (
-        clear_hashvec_cache,
-        hashed_tfidf,
-    )
+    from minisql_engine_spark.materialize import release
+    from minisql_engine_spark.operators.hashvec import hashed_tfidf
 
     try:
         df = hashed_tfidf(load_table(spark, sf_dir, "documents"))
@@ -449,7 +443,7 @@ def test_hashvec_explode_paid_once(spark, sf_dir):
         executed = df._jdf.queryExecution().executedPlan().toString()
         assert executed.count("InMemoryTableScan") >= 2
     finally:
-        clear_hashvec_cache()
+        release("hashvec")
 
 
 def test_corpus_drift_no_cartesian(spark, sf_dir):
@@ -470,10 +464,8 @@ def test_corpus_drift_no_cartesian(spark, sf_dir):
 def test_editsim_variant_table_reused_from_cache(spark, sf_dir):
     """Both self-join sides read the persisted SymSpell dictionary —
     the explode subtree is paid once, then served from storage."""
-    from minisql_engine_spark.operators.editsim import (
-        clear_editsim_cache,
-        edit_distance_pairs,
-    )
+    from minisql_engine_spark.materialize import release
+    from minisql_engine_spark.operators.editsim import edit_distance_pairs
 
     try:
         df = edit_distance_pairs(
@@ -485,7 +477,7 @@ def test_editsim_variant_table_reused_from_cache(spark, sf_dir):
         plan = plan_of(df)
         assert plan.count("InMemoryTableScan") >= 2
     finally:
-        clear_editsim_cache()
+        release("editsim")
 
 
 def test_pergroup_hll_partial_agg_no_sort(spark, sf_dir):

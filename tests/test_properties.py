@@ -508,11 +508,11 @@ def test_pagerank_matches_python_on_random_graphs(spark, pairs, iters):
     replay of the same floor arithmetic on arbitrary directed
     multigraphs (self-loops, parallel edges, dangling sinks) — the
     shuffle order can never change a single unit."""
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.graph import (
         DAMP_DEN,
         DAMP_NUM,
         SCALE,
-        clear_graph_cache,
         pagerank,
     )
 
@@ -535,7 +535,7 @@ def test_pagerank_matches_python_on_random_graphs(spark, pairs, iters):
         r["node"]: r["pr_units"]
         for r in pagerank(df, n_iter=iters).collect()
     }
-    clear_graph_cache()
+    release("graph")
     assert got == rank
 
 
@@ -554,8 +554,8 @@ def test_pagerank_matches_python_on_random_graphs(spark, pairs, iters):
 )
 @SLOW
 def test_star_contraction_equals_propagation_random(spark, pairs):
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.clustering import (
-        clear_clustering_cache,
         connected_components,
         connected_components_star,
     )
@@ -569,7 +569,7 @@ def test_star_contraction_equals_propagation_random(spark, pairs):
     }
     got_df, _ = connected_components_star(df)
     got = {(r["id"], r["component"]) for r in got_df.collect()}
-    clear_clustering_cache()
+    release("clustering")
     assert got == want
 
 
@@ -715,9 +715,7 @@ def test_leakage_split_matches_union_find(spark, pairs, n_docs):
     pair can ever straddle splits."""
     import hashlib
 
-    from minisql_engine_spark.operators.clustering import (
-        clear_clustering_cache,
-    )
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.splits import leakage_safe_split
 
     real = [(a, b) for a, b in pairs if a != b]
@@ -740,7 +738,7 @@ def test_leakage_split_matches_union_find(spark, pairs, n_docs):
     )
     prs = spark.createDataFrame(real, "id_a long, id_b long")
     out = {r["doc_id"]: r for r in leakage_safe_split(docs, prs).collect()}
-    clear_clustering_cache()
+    release("clustering")
     assert len(out) == n_docs
     for i in range(n_docs):
         want_rep = find(i) if i < 16 else i
@@ -816,10 +814,8 @@ TOKENS = st.sampled_from(["aa", "bb", "cc", "dd"])
 )
 @SLOW
 def test_nb_matches_python_on_random_corpora(spark, docs):
-    from minisql_engine_spark.operators.classify import (
-        clear_classify_cache,
-        nb_classify_self,
-    )
+    from minisql_engine_spark.materialize import release
+    from minisql_engine_spark.operators.classify import nb_classify_self
 
     rows = [
         (i, lang, " ".join(ws)) for i, (lang, ws) in enumerate(docs)
@@ -833,7 +829,7 @@ def test_nb_matches_python_on_random_corpora(spark, docs):
         r["doc_id"]: (r["predicted"], r["score"])
         for r in nb_classify_self(df).collect()
     }
-    clear_classify_cache()
+    release("classify")
     assert got == _py_nb(rows)
 
 

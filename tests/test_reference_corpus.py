@@ -15,10 +15,6 @@ from pyspark.errors import AnalysisException
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from minisql_engine_spark.plans import run_sql  # noqa: E402
-from minisql_engine_spark.plans.dialect import (  # noqa: E402
-    DialectError,
-    rewrite_query,
-)
 from minisql_engine_spark.sources import load_csv_database  # noqa: E402
 
 FIXTURES = "/root/reference/TestCases"
@@ -102,22 +98,6 @@ def test_q15_unknown_column_errors(spark):
         run_sql(spark, "Select Z from table1;").collect()
 
 
-# --- dialect shim unit behavior -------------------------------------------
-
-
-def test_rewrite_distinct_and_comments():
-    assert (
-        rewrite_query("select distinct(C) from t -- note\n;")
-        == "select DISTINCT C from t"
-    )
-    assert rewrite_query("select average(A) from t") == "select avg(A) from t"
-
-
-def test_multi_distinct_rejected():
-    with pytest.raises(DialectError):
-        rewrite_query("select distinct(a), distinct(b) from t")
-
-
 def test_ambiguous_column_errors(spark):
     # B exists in table1 and table2 (reference errors too,
     # sqlengine.py:170-172)
@@ -130,20 +110,6 @@ def test_all_comparators_execute(spark):
     assert len(rows(spark, "select A from table1 where A < 0")) == 5
     assert len(rows(spark, "select A from table1 where A >= 900")) == 1
     assert len(rows(spark, "select A from table1 where A != -900")) == 9
-
-
-def test_ansi_count_distinct_passes_through():
-    # count(distinct(a)), count(distinct(b)) is valid ANSI — must NOT
-    # trip the multi-column dialect error
-    q = rewrite_query(
-        "select count(distinct(a)), count(distinct(b)) from t"
-    )
-    assert "count(distinct(a))" in q
-
-
-def test_comment_inside_string_literal_preserved():
-    q = rewrite_query("select * from t where x = 'a--b' -- real comment")
-    assert "'a--b'" in q and "real comment" not in q
 
 
 def test_unknown_conjunction_rejected(spark):

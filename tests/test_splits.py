@@ -6,7 +6,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from minisql_engine_spark.operators.clustering import clear_clustering_cache
+from minisql_engine_spark.materialize import release
 from minisql_engine_spark.operators.splits import leakage_safe_split
 
 
@@ -37,7 +37,7 @@ def test_pairs_never_straddle_and_singletons_self(spark):
     assert by_id[40]["rep"] == by_id[43]["rep"] == 40
     # singleton: own id is the representative
     assert by_id[25]["rep"] == 25
-    clear_clustering_cache()
+    release("clustering")
 
 
 def test_bucket_matches_hashlib_and_mapping(spark):
@@ -49,7 +49,7 @@ def test_bucket_matches_hashlib_and_mapping(spark):
         assert r["bucket"] == b
         want = "train" if b < 8 else ("val" if b == 8 else "test")
         assert r["split"] == want
-    clear_clustering_cache()
+    release("clustering")
 
 
 def test_assignment_stable_under_corpus_growth(spark):
@@ -66,7 +66,7 @@ def test_assignment_stable_under_corpus_growth(spark):
         for r in leakage_safe_split(_docs(spark, 60), pairs).collect()
     }
     assert all(big[i] == small[i] for i in small)
-    clear_clustering_cache()
+    release("clustering")
 
 
 def test_split_fractions_roughly_respected(spark):
@@ -79,7 +79,7 @@ def test_split_fractions_roughly_respected(spark):
     assert counts["train"] > counts.get("test", 0)
     # md5 buckets of 0..499: expect ~80/10/10 with slack
     assert 0.7 <= counts["train"] / 500 <= 0.9
-    clear_clustering_cache()
+    release("clustering")
 
 
 def test_custom_bucket_weights(spark):
@@ -96,7 +96,7 @@ def test_custom_bucket_weights(spark):
         ) % 4
         want = "train" if b < 2 else ("val" if b == 2 else "test")
         assert r["split"] == want
-    clear_clustering_cache()
+    release("clustering")
 
 
 def test_split_plan_broadcasts_component_map(spark):
@@ -109,4 +109,4 @@ def test_split_plan_broadcasts_component_map(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    clear_clustering_cache()
+    release("clustering")

@@ -4,8 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from minisql_engine_spark.materialize import release
 from minisql_engine_spark.operators.sq import (
-    clear_sq_cache,
     sq8_codebook,
     sq8_encode,
     sq8_topk,
@@ -21,7 +21,7 @@ def test_sq8_topk_oracle_parity(spark, duck, sf_dir):
     out = sq8_topk(load_table(spark, sf_dir, "embeddings"), QIDS, k=10)
     ddf = duck.execute(sq8_topk_sql(QIDS, k=10)).fetchdf()
     assert_matches_oracle(out, ddf, "sq8_topk")
-    clear_sq_cache()
+    release("sq")
 
 
 def test_sq8_approx_only_oracle_parity(spark, duck, sf_dir):
@@ -30,7 +30,7 @@ def test_sq8_approx_only_oracle_parity(spark, duck, sf_dir):
     )
     ddf = duck.execute(sq8_topk_sql(QIDS, k=10, rerank=False)).fetchdf()
     assert_matches_oracle(out, ddf, "sq8_approx")
-    clear_sq_cache()
+    release("sq")
 
 
 def test_sq8_recall_vs_exact(spark, sf_dir):
@@ -55,7 +55,7 @@ def test_sq8_recall_vs_exact(spark, sf_dir):
         for r in sq8_topk(emb, QIDS, k=10, rerank=False).collect()
     }
     assert len(approx & truth) / len(truth) >= 0.8
-    clear_sq_cache()
+    release("sq")
 
 
 def test_sq8_codes_bounded_and_extremes_hit_rails(spark, sf_dir):
@@ -66,7 +66,7 @@ def test_sq8_codes_bounded_and_extremes_hit_rails(spark, sf_dir):
         F.explode("codes").alias("c")
     ).agg(F.min("c").alias("lo"), F.max("c").alias("hi")).collect()[0]
     assert stats["lo"] == 0 and stats["hi"] == 255
-    clear_sq_cache()
+    release("sq")
 
 
 def test_sq8_degenerate_dimension_encodes_zero(spark):
@@ -81,4 +81,4 @@ def test_sq8_degenerate_dimension_encodes_zero(spark):
     }
     assert all(c[0] == 0 for c in rows.values())  # constant dim
     assert rows[1][1] == 0 and rows[2][1] == 255  # rails
-    clear_sq_cache()
+    release("sq")

@@ -37,10 +37,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.pq import ivf_pq_topk
     from minisql_engine_spark.operators.similarity import (
         brute_force_topk,
-        clear_centroid_cache,
         ivf_topk,
     )
     from minisql_engine_spark.sources import load_table
@@ -122,7 +122,7 @@ def main() -> None:
                 f"| {label} | {n_probe} | {recall(got, truth)} |"
                 f" {dt:.2f} |"
             )
-            clear_centroid_cache()
+            release("centroids")
     spark.stop()
 
 

@@ -246,22 +246,11 @@ def main() -> int:
         flush=True,
     )
 
+    from minisql_engine_spark.materialize import release
+
     def _release():
         # same inter-query hygiene as bench.py: drop persisted state
-        for mod, fn in [
-            ("minisql_engine_spark.operators.similarity",
-             "clear_centroid_cache"),
-            ("minisql_engine_spark.operators.knn_graph",
-             "clear_knn_cache"),
-            ("minisql_engine_spark.operators.curriculum",
-             "clear_curriculum_cache"),
-            ("minisql_engine_spark.operators.lm_score",
-             "clear_lm_cache"),
-        ]:
-            try:
-                getattr(importlib.import_module(mod), fn)()
-            except Exception:
-                pass
+        release()
         spark.catalog.clearCache()
 
     out = {}

@@ -55,32 +55,12 @@ def main() -> None:
     force(em.flagship(spark, SF_DIR))
 
     # same cache clears as bench.py
-    from minisql_engine_spark.operators.classify import clear_classify_cache
-    from minisql_engine_spark.operators.clustering import clear_clustering_cache
-    from minisql_engine_spark.operators.curriculum import clear_curriculum_cache
-    from minisql_engine_spark.operators.dedup import clear_simhash_cache
-    from minisql_engine_spark.operators.editsim import clear_editsim_cache
-    from minisql_engine_spark.operators.graph import clear_graph_cache
-    from minisql_engine_spark.operators.hashvec import clear_hashvec_cache
+    from minisql_engine_spark.materialize import release
     from minisql_engine_spark.operators.lm_score import clear_lm_frozen_cache
-    from minisql_engine_spark.operators.retrieval import clear_retrieval_cache
-    from minisql_engine_spark.operators.semdedup import clear_semdedup_cache
-    from minisql_engine_spark.operators.similarity import clear_centroid_cache
-    from minisql_engine_spark.operators.sq import clear_sq_cache
 
     def clear() -> None:
-        clear_simhash_cache()
-        clear_sq_cache()
-        clear_curriculum_cache()
+        release()
         clear_lm_frozen_cache()
-        clear_editsim_cache()
-        clear_hashvec_cache()
-        clear_centroid_cache()
-        clear_clustering_cache()
-        clear_semdedup_cache()
-        clear_retrieval_cache()
-        clear_graph_cache()
-        clear_classify_cache()
 
     names = args.names
     samples: dict[str, list[float]] = {n: [] for n in names}
