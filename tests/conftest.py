@@ -20,6 +20,12 @@ from minisql_engine_spark.sources.parquet_catalog import TABLES  # noqa: E402
 # Driver runs correctness at sf0.01; allow sf0.001 for quick local loops.
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
+# The reference's TestCases fixtures (metadata.txt, table1-3.csv),
+# checked in so the corpus and CLI tests read the same copy.
+REFERENCE_FIXTURES = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fixtures", "reference"
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -9,8 +9,9 @@ import sys
 
 import pytest
 
+from tests.conftest import REFERENCE_FIXTURES as FIXTURES
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-FIXTURES = "/root/reference/TestCases"
 
 
 def run_cli(*args: str):

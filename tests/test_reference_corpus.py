@@ -1,6 +1,7 @@
 """End-to-end: the reference's entire 15-query corpus
-(/root/reference/TestCases/test.txt) through the SQL front door on the
-reference's own CSV fixtures — capability parity, ANSI semantics
+(``TestCases/test.txt``) through the SQL front door on the reference's
+own CSV fixtures, checked in under ``tests/fixtures/reference/`` —
+capability parity, ANSI semantics
 (SURVEY §5.2 item 1). Expected values computed from the fixture data
 with correct relational semantics (not the reference's Q1-Q11 bugs)."""
 
@@ -16,11 +17,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from minisql_engine_spark.plans import run_sql  # noqa: E402
 from minisql_engine_spark.sources import load_csv_database  # noqa: E402
+from tests.conftest import REFERENCE_FIXTURES as FIXTURES  # noqa: E402
 
-FIXTURES = "/root/reference/TestCases"
 
-
-@pytest.fixture(scope="module", autouse=True)
+@pytest.fixture(scope="module")
 def ref_db(spark):
     return load_csv_database(spark, FIXTURES)
 
@@ -29,12 +29,12 @@ def rows(spark, q):
     return sorted(tuple(r) for r in run_sql(spark, q).collect())
 
 
-def test_q1_full_scan(spark):
+def test_q1_full_scan(spark, ref_db):
     out = rows(spark, "select * from table1")
     assert len(out) == 10 and out[0] == (-952, 311, 1318)
 
 
-def test_q2_to_q5_aggregates(spark):
+def test_q2_to_q5_aggregates(spark, ref_db):
     assert rows(spark, "select max(A) from table1") == [(922,)]
     assert rows(spark, "select min(B) from table1") == [(85,)]
     [(avg_c,)] = rows(spark, "select avg(C) from table1")
@@ -42,34 +42,34 @@ def test_q2_to_q5_aggregates(spark):
     assert rows(spark, "select sum(D) from table2") == [(107459,)]
 
 
-def test_q6_projection(spark):
+def test_q6_projection(spark, ref_db):
     out = rows(spark, "select A from table1")
     assert len(out) == 10 and out[0] == (-952,)
 
 
-def test_q7_cartesian(spark):
+def test_q7_cartesian(spark, ref_db):
     out = rows(spark, "select A,D from table1,table2")
     assert len(out) == 100  # 10×10, no 1000-row cap semantics
 
 
-def test_q8_distinct_dialect(spark):
+def test_q8_distinct_dialect(spark, ref_db):
     # reference dialect distinct(C) via the shim; table3 = table1 ×32
     out = rows(spark, "select distinct(C) from table3")
     assert len(out) == 10
 
 
-def test_q9_filter(spark):
+def test_q9_filter(spark, ref_db):
     assert rows(spark, "select B,C from table1 where A=-900") == [(718, 9020)]
 
 
-def test_q10_q11_or_and_semicolon(spark):
+def test_q10_q11_or_and_semicolon(spark, ref_db):
     out = rows(spark, "select A,B from table1 where A=775 OR B=803")
     assert (775, 85) in out and (411, 803) in out
     out2 = rows(spark, "select A,B from table1 where A=922 OR B=158;")
     assert (922, 158) in out2
 
 
-def test_q12_join_star(spark):
+def test_q12_join_star(spark, ref_db):
     # join with USING-style dedup: B emitted once → 4 columns
     df = run_sql(
         spark,
@@ -80,7 +80,7 @@ def test_q12_join_star(spark):
     assert df.count() == 10  # B is a 1:1 key in the fixtures
 
 
-def test_q13_join_projection(spark):
+def test_q13_join_projection(spark, ref_db):
     out = rows(
         spark,
         "select A,D from table1,table2 where table1.B=table2.B",
@@ -88,24 +88,24 @@ def test_q13_join_projection(spark):
     assert len(out) == 10
 
 
-def test_q14_unknown_table_errors(spark):
+def test_q14_unknown_table_errors(spark, ref_db):
     with pytest.raises(AnalysisException):
         run_sql(spark, "Select A from table4;").collect()
 
 
-def test_q15_unknown_column_errors(spark):
+def test_q15_unknown_column_errors(spark, ref_db):
     with pytest.raises(AnalysisException):
         run_sql(spark, "Select Z from table1;").collect()
 
 
-def test_ambiguous_column_errors(spark):
+def test_ambiguous_column_errors(spark, ref_db):
     # B exists in table1 and table2 (reference errors too,
     # sqlengine.py:170-172)
     with pytest.raises(AnalysisException):
         run_sql(spark, "select B from table1, table2").collect()
 
 
-def test_all_comparators_execute(spark):
+def test_all_comparators_execute(spark, ref_db):
     # Q1 fix: < > <= >= != must actually filter (reference ran all as =)
     assert len(rows(spark, "select A from table1 where A < 0")) == 5
     assert len(rows(spark, "select A from table1 where A >= 900")) == 1
